@@ -10,10 +10,25 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * Memory pressure itself can't be manufactured in the shared test JVM
   * (executor memory is fixed at context start), so this uses the
   * session-settable knobs Spark ships for exactly this purpose:
-  *  - `spark.sql.TungstenAggregate.testFallbackStartsAt` — the hash agg's
-  *    own test hook: the BytesToBytesMap "fails" after N keys, destructs
-  *    into an UnsafeKVExternalSorter and finishes sort-based — the code
-  *    path a 100 TB aggregation takes when the map exceeds task memory.
+  *  - `spark.sql.TungstenAggregate.testFallbackStartsAt` = "F,N" — the hash
+  *    agg's own test hook. Its generated counter counts INPUT ROWS since the
+  *    last fallback, not keys: after F rows the fast hash map hands off to
+  *    the BytesToBytesMap, and after N rows the map "fails", destructs into
+  *    an UnsafeKVExternalSorter spill file, and the counter resets. At the
+  *    end the task merges every spill file and finishes sort-based — the
+  *    code path a 100 TB aggregation takes when the map exceeds task memory.
+  *    N is bounded on both sides. Each spill file the final merge holds
+  *    open costs two 1 MiB heap read-ahead buffers
+  *    (`spark.unsafe.sorter.spill.reader.buffer.size`: default and minimum),
+  *    and a task writes (its input rows / N) files. N = 2 made each of
+  *    q_hist_equidepth's 4 concurrent ~1,500-row tasks hold ~750 files open
+  *    (≈1.5 GiB heap per task; ~5,760 files over the query), and the test
+  *    JVM died of an OOM at 7g. At N = 64, q_agg_tpch_q1's one ~2,600-row
+  *    task holds ≈41 files (≈82 MiB) and q_hist_equidepth ≈24 files per
+  *    task (≈190 MiB over 4 tasks).
+  *    N must also stay below the smallest per-task input of the hash-agg
+  *    family (documents: 500 rows at sf0.001), so that every query named
+  *    below still falls back several times and merges several spill files.
   *  - `spark.sql.windowExec.buffer.{in.memory,spill}.threshold` — window
   *    partition buffers move to UnsafeExternalSorter after N rows and
   *    FORCE a disk spill after M — the real spill-file write+readback.
@@ -36,7 +51,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 class SpillSpec extends SparkSuite {
 
   private val spillConfs = Seq(
-    "spark.sql.TungstenAggregate.testFallbackStartsAt" -> "2,2",
+    // input rows since the last fallback, not keys: hand off to the
+    // BytesToBytesMap after 2, spill it every 64 (N's bounds: scaladoc)
+    "spark.sql.TungstenAggregate.testFallbackStartsAt" -> "2,64",
     // ObjectHashAggregate (TypedImperativeAggregate buffers: sketches,
     // collect_set) falls back to sort-based after 2 in-memory keys
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "2",
