@@ -2,73 +2,6 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 
-/** Honest re-execution of memoized physical plans (Bench, JobCensus).
-  *
-  * ReusedExchangeExec holds its target exchange as a constructor FIELD, not
-  * a child, so a plain clone() still points at the ORIGINAL exchange
-  * instance — whose cached result would make every later pass stage-skip
-  * that subtree. [[rewireReuse]] retargets each reused node at the CLONED
-  * exchange with the same canonical form, so shared-exchange plans (the
-  * GlobalRank/text-heaps repartition device) stay memoized AND every pass
-  * recomputes the shared exchange exactly once, honestly.
-  *
-  * Two traps this implementation exists to dodge (both found by probing —
-  * `graft.ReuseProbe` printed open=33/33 under the naive version):
-  *  1. Replacing the stale node with a fresh `ReusedExchangeExec(out,
-  *     clonedE)` silently no-ops — the cloned exchange is a structural
-  *     clone of the stale one, so the new node is `==` the old and
-  *     `mapChildren`'s `fastEquals` copy-on-write keeps the old child.
-  *     The replacement is therefore the class-distinct
-  *     [[graft.plans.HonestReusedExchangeExec]].
-  *  2. In CHAINED shared-exchange plans (q_agg_rfm's three ranks), the
-  *     outer shared exchange CONTAINS the inner rank's reuse node, so
-  *     rewiring the inner reuse copy-on-writes the outer exchange into a
-  *     new instance — a canonical map built BEFORE the transform would
-  *     retarget the outer reuse at the pre-transform instance, now out of
-  *     tree. The map is therefore built DURING the same `transformUp`:
-  *     post-order visits every (post-rewrite) exchange before any node
-  *     that reuses it, because the kept exchange can never be an ancestor
-  *     of its own reuse (that would be cyclic) and `ReuseExchange` keeps
-  *     the occurrence that precedes its reuses in both orders.
-  */
-private[graft] object PlanHonesty {
-  import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
-  import graft.plans.HonestReusedExchangeExec
-
-  def rewireReuse(plan: SparkPlan): SparkPlan = {
-    val byCanon = scala.collection.mutable.Map[SparkPlan, Exchange]()
-    plan.transformUp {
-      case e: Exchange =>
-        byCanon.getOrElseUpdate(e.canonicalized, e); e
-      case r @ ReusedExchangeExec(out, child) =>
-        byCanon.get(child.canonicalized).fold(r: SparkPlan)(
-          e => HonestReusedExchangeExec(out, e))
-      case r @ HonestReusedExchangeExec(out, child) => // idempotent re-rewire
-        byCanon.get(child.canonicalized).fold(r: SparkPlan)(
-          e => HonestReusedExchangeExec(out, e))
-    }
-  }
-
-  /** True iff every reused-exchange reference points INSIDE this tree —
-    * the honesty precondition for (re-)executing a reuse-bearing plan. */
-  def reuseClosed(plan: SparkPlan): Boolean = {
-    val ids = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
-    plan.foreach { case e: Exchange => ids.add(e); case _ => () }
-    var ok = true
-    plan.foreach {
-      case ReusedExchangeExec(_, child) => if (!ids.contains(child)) ok = false
-      case HonestReusedExchangeExec(_, child) =>
-        if (!ids.contains(child)) ok = false
-      case _ => ()
-    }
-    ok
-  }
-
-  def prepareClone(plan: SparkPlan): SparkPlan =
-    rewireReuse(plan.clone().asInstanceOf[SparkPlan])
-}
-
 object Bench {
 
   /** Queries whose builder fn PERFORMS the work (runs a streaming pipeline /
@@ -83,18 +16,18 @@ object Bench {
       "q_graph_hits",
       // the builder collect()s the vocabulary²-bounded marker aggregate
       // (r15 shape) — the dominant scan+shuffle+collect work happens at
-      // BUILD time, so the memoized path would time only the ~326-row
+      // BUILD time, so a plan built once would time only the ~326-row
       // local relation (same class as the sketch/bloom builds below)
       "q_assoc_lift",
       // sketch/bloom/bitmap builders run eager driver-side collects (the
       // sketch build, the bloom bitset, the bitmap domain + dim bitset):
-      // memoized clones would embed those results as literals and never
+      // a plan built once would embed those results as literals and never
       // time the build pass, while each DuckDB twin recomputes its sketch
       // CTE inline per run (r14 sweep — same class as q_assoc_lift)
       "q_agg_countmin", "q_join_bloom", "q_agg_bitmap_and",
       "q_agg_bitmap_distinct")
-  /** Shared with [[JobCensus]] so the census's honesty can never drift from
-    * the bench's when a new eager query is added (advisor r12). */
+  /** Read by [[passes]], so Bench, [[JobCensus]] and [[ConfProbe]] can never
+    * drift apart when a new eager query is added (advisor r12). */
   private[graft] def isEager(name: String): Boolean =
     eager(name) || name.startsWith("q_stream_")
 
@@ -104,8 +37,8 @@ object Bench {
     * iterations at build time (q_graph_bfs/label_prop/kcore/modularity/
     * closeness/walk), and the single-parse/single-scan stagers
     * (q_ts_gap_fill, q_geo_join_grid, q_seq_stationary, q_text_perplexity,
-    * …). Their memoized plans read the builder's CACHED rows, so clone-mode
-    * timed passes priced only the read-back tail while each DuckDB twin
+    * …). A plan built once reads the builder's CACHED rows, so passes that
+    * re-ran it priced only the read-back tail while each DuckDB twin
     * recomputes the whole fixpoint per run (q_graph_bfs timed 0.116 s
     * against a full recursive-CTE replay — the exact q_join_bloom class the
     * r14 honesty rule fixed by hand). Instead of growing the hand list, the
@@ -133,20 +66,60 @@ object Bench {
     counter.get
   }
 
-  /** The ONE exchange detector behind the memoization-mode decision: a plan
-    * with no shuffle/broadcast exchange holds no cross-pass state, so the
-    * bench re-executes the SAME instance ("pure" mode). Previously hand-copied
-    * in Bench, [[JobCensus]] and [[AbProbe]] — the same silent-drift class the
-    * r15 sweep fixed for quiesce()/isEager by centralizing them here
-    * (advisor r15): a probe whose copy drifted would A/B a mode Bench never
-    * runs. Name-based on purpose: ShuffleExchangeExec/BroadcastExchangeExec
-    * live in different packages across Spark minors, and the columnar
-    * variants match too. */
-  private[graft] def hasExchange(plan: SparkPlan): Boolean =
-    plan.exists { p =>
-      val c = p.getClass.getSimpleName
-      c.contains("ShuffleExchange") || c.contains("BroadcastExchange")
+  /** A registered query's timed passes. The caller times `next()` together
+    * with the drain of the plan it returns; `warm()` gives the plan of the
+    * one untimed warm-up run. */
+  private[graft] final class Passes(val builderWork: Boolean,
+      built: Option[SparkPlan], val next: () => SparkPlan) {
+    /** The plan preparation already built, if any: a builder that launched
+      * jobs is not run a second time just to warm up. */
+    def warm(): SparkPlan = built.getOrElse(next())
+  }
+
+  /** Full per-pass rebuild: the builder re-invoked and planned every pass. */
+  private[graft] def rebuildPasses(spark: SparkSession, sfDir: String, name: String): Passes =
+    new Passes(builderWork = false, None,
+      () => SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan)
+
+  /** How every timed pass gets its physical plan — the ONE rule Bench,
+    * [[JobCensus]] and [[ConfProbe]] share.
+    *  - A builder that does the work ([[isEager]], or one that launched Spark
+    *    jobs while it ran: [[jobCounter]]) is re-invoked every pass, inside
+    *    the timer.
+    *  - Every other query keeps only its optimized logical plan, and each
+    *    pass plans it physically afresh
+    *    ([[org.apache.spark.sql.execution.graft.PlanBridge.replanner]]).
+    * A fresh plan has fresh exchanges, reuse targets, DPP broadcasts and
+    * subquery futures, so no pass can stage-skip through work an earlier
+    * pass cached: the rule is honest without any check on the plan's shape.
+    * Physical planning sits inside the timer, as a user pays for it (a
+    * median ~5 ms a query at sf0.1). */
+  private[graft] def passes(spark: SparkSession, sfDir: String, name: String,
+      jobs: java.util.concurrent.atomic.AtomicLong): Passes =
+    if (isEager(name)) rebuildPasses(spark, sfDir, name)
+    else {
+      val sc = spark.sparkContext
+      val jobsBefore = settledJobs(sc, jobs)
+      val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
+      val replan = org.apache.spark.sql.execution.graft.PlanBridge.replanner(qe)
+      if (settledJobs(sc, jobs) > jobsBefore)
+        new Passes(builderWork = true, Some(qe.executedPlan),
+          rebuildPasses(spark, sfDir, name).next)
+      else new Passes(builderWork = false, None, replan)
     }
+
+  /** Materialize every output row of a physical plan without the
+    * DataSourceV2 write framework: the noop-sink write was measured at
+    * ~0.10-0.20 s of pure harness overhead PER INVOCATION (a second full
+    * optimization of the wrapped write command + commit-protocol setup).
+    * runJob over the plan's row iterator does what the noop sink did (pull
+    * and discard every row, which forces every output column), minus the
+    * framework. */
+  private[graft] def runPlan(sc: org.apache.spark.SparkContext, plan: SparkPlan): Unit =
+    sc.runJob(plan.execute(), drain _)
+  private def drain(it: Iterator[org.apache.spark.sql.catalyst.InternalRow]): Long = {
+    var n = 0L; while (it.hasNext) { it.next(); n += 1 }; n
+  }
 
   /** Wait until the async listener bus stops delivering: `snap`'s value is
     * unchanged across two consecutive 60 ms samples (or the deadline lapses —
@@ -193,8 +166,7 @@ object Bench {
       // ~100 ms × stages × 108 queries at sf0.1 while optimizing nothing at
       // this data size — off for the timed run. The library leaves AQE at its
       // default (on) everywhere else; on a real cluster it is the right call.
-      // (AQE off also keeps executedPlan a concrete SparkPlan, which the
-      // plan-reuse scheme below requires.)
+      // (The per-pass re-plan of [[passes]] is non-adaptive either way.)
       .config("spark.sql.adaptive.enabled", "false")
       // The compiled-class cache (default 100 entries) is far too small for
       // this run shape: 310 queries × ~3-8 WholeStageCodegen/expression spans
@@ -232,46 +204,14 @@ object Bench {
     }
     mark("start")
 
-    // Materialize every output row of a physical plan without the DataSourceV2
-    // write framework: the noop-sink write was measured at ~0.10-0.20 s of
-    // pure harness overhead PER INVOCATION (a second full optimization of the
-    // wrapped write command + commit-protocol setup) — 103 queries × that is
-    // ~2/3 of the old bench's "floor". runJob over the plan's row iterator
-    // does exactly what the noop sink did (pull and discard every row, which
-    // forces every output column), minus the framework.
-    def drain(it: Iterator[org.apache.spark.sql.catalyst.InternalRow]): Long = {
-      var n = 0L; while (it.hasNext) { it.next(); n += 1 }; n
-    }
-    def runPlan(plan: SparkPlan): Unit =
-      sc.runJob(plan.execute(), drain _)
-    // Timed-pass split for memoized plans: the CLONE (a pure tree copy — no
-    // work starts) happens outside the timer; .execute() + runJob are INSIDE
-    // it. execute() must be timed: BroadcastExchange starts its build future
-    // at doPrepare, and for the ANN/tfidf family the broadcast side carries
-    // real aggregations over the full table — leaving execute() untimed let
-    // that work escape the measurement (observed: q_ann_ivf "0.43 s" vs
-    // 0.83 s with the broadcast legs priced). The codegen-source regeneration
-    // execute() also pays (~30-80 ms) is the price of not reusing cached
-    // shuffle/broadcast results across passes.
-    import PlanHonesty.{prepareClone, reuseClosed}
-
-    // Plan memoization (round-3..5 verdict prescription): analysis,
-    // optimization, and physical planning run ONCE per (query, sfDir); each
-    // timed pass executes a fresh CLONE of the memoized physical plan. The
-    // clone is load-bearing for honesty: ShuffleExchangeExec and
-    // BroadcastExchangeExec cache their result on the node instance, so
-    // re-executing the SAME plan object would skip every map stage and
-    // broadcast build after pass 1. A cloned node starts cold — every timed
-    // pass recomputes all shuffles, broadcasts, and result stages end to end
-    // (clone + codegen-source regeneration sit INSIDE the timed region).
-    // Plans that embed cross-pass state anyway — ReusedExchangeExec points at
-    // the ORIGINAL exchange instance (clone keeps the reference; it is not a
-    // child), SubqueryExec memoizes its relationFuture — fall back to full
-    // per-pass rebuild, as do the eager queries above.
+    // Each pass's plan comes from [[passes]]; the timer covers getting it
+    // (re-plan or rebuild), execute() and the drain. execute() must be
+    // timed: BroadcastExchange starts its build future at doPrepare, and for
+    // the ANN/tfidf family the broadcast side carries real aggregations over
+    // the full table (observed: q_ann_ivf "0.43 s" vs 0.83 s with the
+    // broadcast legs priced).
+    def runPlan(plan: SparkPlan): Unit = Bench.runPlan(sc, plan)
     val names = SparkEntry.queries.keys.toSeq
-    val planned = scala.collection.mutable.Map[String, SparkPlan]()
-    val pure = scala.collection.mutable.Map[String, SparkPlan]() // exchange-free: reuse instance
-    val rebuild = scala.collection.mutable.Set[String]()
 
     // Warmup pass 1 — eager pipelines at the smallest scale factor: compiles
     // the codegen classes + JITs the state-store machinery without paying the
@@ -353,58 +293,26 @@ object Bench {
     val artifactsWallSec = (System.nanoTime() - artWall0) / 1e9
     mark("artifacts_done")
 
-    // Warmup pass 2 — lazy queries at the BENCHED dir: plan once (memoized),
-    // run one untimed cloned execution. This warms codegen/JIT on the real
+    // Warmup pass 2 — lazy queries at the BENCHED dir: prepare each query's
+    // passes and run one untimed pass. This warms codegen/JIT on the real
     // data shapes AND triggers the one-time memoized layout writes (bucketed
     // saveAsTable copies, CSV/JSON exports) at sfDir, so timed passes measure
     // the query, never the ingest — at cluster scale those writes are the
     // nightly ingest job, not the query (BucketedLayout scaladoc).
     val builderJobCounter = jobCounter(sc)
     val builderWork = scala.collection.mutable.ArrayBuffer[String]()
-    names.filterNot(isEager).foreach { n =>
-      try {
-        val jobsBefore = settledJobs(sc, builderJobCounter)
-        val plan = SparkEntry.queries(n)(spark, sfDir).queryExecution.executedPlan
-        // builder-work detection (see [[jobCounter]]): a builder that
-        // launched jobs has executed work whose results the memoized plan
-        // would read from cache — rebuild mode re-invokes it per timed pass
-        if (settledJobs(sc, builderJobCounter) > jobsBefore) {
-          builderWork += n
-          rebuild += n
-          runPlan(plan)
-        } else {
-          // Reuse-bearing plans are memoizable since rewireReuse (above)
-          // retargets the clone's reuse references; only plans whose reuse
-          // crosses the tree boundary (never observed) or that memoize
-          // subquery futures still need the per-pass rebuild.
-          // subqueriesAll, not subqueries: `subqueries` is NODE-LOCAL (the
-          // root's own expressions only — and the root is typically a
-          // WholeStageCodegenExec with none), so a scalar/IN subquery hanging
-          // off a FilterExec deeper in the tree would pass the clone path and
-          // stage-skip through its memoized relationFuture on every timed pass
-          val stateful = plan.subqueriesAll.nonEmpty
-          // a plan with NO exchange nodes holds no cross-pass state at all:
-          // there is no shuffle map output to stage-skip and no broadcast
-          // future to cache, so re-executing the SAME instance recomputes
-          // every task honestly — and skips the per-pass codegen-source
-          // regeneration the clone path pays (~30-80 ms on scan/project/
-          // TakeOrdered-shaped queries, a large share of their total)
-          if (stateful) { rebuild += n; runPlan(plan) }
-          else if (!hasExchange(plan)) { pure(n) = plan; runPlan(plan) }
-          else {
-            val cloned = prepareClone(plan)
-            // honesty gate: a clone whose reuse references escaped the tree
-            // (rewire found no canonical match) would stage-skip — rebuild it
-            if (reuseClosed(cloned)) { planned(n) = plan; runPlan(cloned) }
-            else { rebuild += n; runPlan(cloned) }
-          }
-        }
+    val passesOf: Map[String, Passes] = names.map { n =>
+      n -> (try {
+        val p = passes(spark, sfDir, n, builderJobCounter)
+        if (p.builderWork) builderWork += n
+        if (!isEager(n)) runPlan(p.warm())
+        p
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] warmup $n fell back to rebuild: ${e.getMessage}")
-          rebuild += n
-      }
-    }
+          rebuildPasses(spark, sfDir, n)
+      })
+    }.toMap
     if (builderWork.nonEmpty) System.err.println(
       "[bench] builder-work detection reclassified to rebuild mode " +
         s"(${builderWork.size}): ${builderWork.sorted.mkString(", ")}")
@@ -474,22 +382,9 @@ object Bench {
     for (name <- names) {
       sc.setJobGroup(s"bench:$name#$pass", null)
       val t = try {
-        pure.get(name).orElse(planned.get(name)) match {
-          case Some(plan) if pure.contains(name) =>
-            // exchange-free: same instance, every task recomputes (see warmup)
-            val t0 = System.nanoTime()
-            runPlan(plan)
-            (System.nanoTime() - t0) / 1e9
-          case Some(plan) =>
-            val cloned = prepareClone(plan) // untimed: pure tree copy
-            val t0 = System.nanoTime()
-            runPlan(cloned)
-            (System.nanoTime() - t0) / 1e9
-          case None => // eager or rebuild-mode: full pipeline per pass
-            val t0 = System.nanoTime()
-            runPlan(SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan)
-            (System.nanoTime() - t0) / 1e9
-        }
+        val t0 = System.nanoTime()
+        runPlan(passesOf(name).next())
+        (System.nanoTime() - t0) / 1e9
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")

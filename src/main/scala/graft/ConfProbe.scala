@@ -1,17 +1,16 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
-
 /** Dev probe: A/B SESSION-level conf variants over a query subset, in ONE
-  * JVM, under Bench's honest execution scheme. Each variant is a `;`-joined
-  * `k=v` list applied via spark.conf.set BEFORE the variant's plans are
-  * built (shuffle width, broadcast threshold, … — anything read at planning
-  * time; context-level confs need separate JVMs and are out of scope). The
-  * special pseudo-conf `sysprop:<key>=<v>` sets a JVM system property
-  * instead (the spread-width knob). Timed passes are INTERLEAVED across
-  * variants (v1 pass1, v2 pass1, v1 pass2, …) so a host stall poisons one
-  * sample of each arm, not one whole arm — the same discipline as Bench's
-  * round-robin and AbProbe.
+  * JVM, each pass prepared by Bench's own rule ([[Bench.passes]]). Each
+  * variant is a `;`-joined `k=v` list applied via spark.conf.set BEFORE the
+  * variant's plans are built (shuffle width, broadcast threshold, … —
+  * anything read at planning time; context-level confs need separate JVMs
+  * and are out of scope). The special pseudo-conf `sysprop:<key>=<v>`
+  * sets a JVM system property instead (the spread-width knob). Timed
+  * passes are INTERLEAVED across variants (v1 pass1, v2 pass1, v1 pass2,
+  * …) so a host stall poisons one sample of each arm, not one whole arm —
+  * the same discipline as Bench's round-robin. The re-plan is
+  * non-adaptive, so an AQE-on variant is not expressible.
   *
   * Usage:
   *   CONF_VARIANTS="base=|w4=spark.sql.shuffle.partitions=4" \
@@ -31,11 +30,6 @@ object ConfProbe {
     val spark = Bench.buildSession()
     spark.sparkContext.setLogLevel("ERROR")
     val sc = spark.sparkContext
-    def drain(it: Iterator[org.apache.spark.sql.catalyst.InternalRow]): Long = {
-      var c = 0L; while (it.hasNext) { it.next(); c += 1 }; c
-    }
-    def runPlan(p: SparkPlan): Unit = sc.runJob(p.execute(), drain _)
-
     val passes = sys.env.getOrElse("CONF_PASSES", "5").toInt
     val queries = sys.env.getOrElse("CONF_QUERIES", "")
       .split(',').map(_.trim).filter(_.nonEmpty).toSeq
@@ -72,47 +66,19 @@ object ConfProbe {
       }
     }
 
-    // Plan each (query, variant) under that variant's confs; execution mode
-    // mirrors Bench (pure = same instance, else honest clone; rebuild-class
-    // and eager queries run the full builder per pass under the confs).
-    sealed trait Mode
-    case object Pure extends Mode
-    case object Clone extends Mode
-    case object Rebuild extends Mode
-    val planned = scala.collection.mutable.Map[(String, String), (Mode, SparkPlan)]()
-    val builderJobCounter = Bench.jobCounter(sc)
+    // Prepare each (query, variant) under that variant's confs and run one
+    // untimed pass: every variant gets the same warm-up, so pass-1 cold costs
+    // (JIT, page cache, codegen) do not land on whichever variant runs first
+    // (advisor r16).
+    val prepared = scala.collection.mutable.Map[(String, String), Bench.Passes]()
+    val builderJobs = Bench.jobCounter(sc)
     for (q <- queries; (vn, confs) <- variants) withConfs(confs) {
-      // Warm-up parity across ALL modes (advisor r16): the Rebuild branches
-      // (eager and subquery-bearing queries) previously got no untimed
-      // execution here, so pass-1 cold costs (JIT, page cache, codegen)
-      // landed on whichever variant ran first — order alternation only
-      // cancels position effects from pass 2 onward, which biases
-      // small-pass-count medians. Every branch now executes once untimed.
-      if (Bench.isEager(q)) {
-        planned((q, vn)) = (Rebuild, null)
-        try runPlan(SparkEntry.queries(q)(spark, sfDir).queryExecution.executedPlan)
-        catch { case e: Throwable =>
-          System.err.println(s"[conf] warmup $q/$vn failed: ${e.getMessage}") }
-      }
-      else {
-        val jobsBefore = Bench.settledJobs(sc, builderJobCounter)
-        val plan = SparkEntry.queries(q)(spark, sfDir).queryExecution.executedPlan
-        // builder-work detection, the bench's r17 rule (Bench.jobCounter)
-        if (Bench.settledJobs(sc, builderJobCounter) > jobsBefore) {
-          planned((q, vn)) = (Rebuild, null); runPlan(plan)
-        }
-        else if (plan.subqueriesAll.nonEmpty) {
-          planned((q, vn)) = (Rebuild, null); runPlan(plan)
-        }
-        else if (!Bench.hasExchange(plan)) {
-          planned((q, vn)) = (Pure, plan); runPlan(plan)
-        } else {
-          val cloned = PlanHonesty.prepareClone(plan)
-          if (PlanHonesty.reuseClosed(cloned)) {
-            planned((q, vn)) = (Clone, plan); runPlan(cloned)
-          } else { planned((q, vn)) = (Rebuild, null); runPlan(cloned) }
-        }
-      }
+      try {
+        val p = Bench.passes(spark, sfDir, q, builderJobs)
+        prepared((q, vn)) = p
+        Bench.runPlan(sc, p.warm())
+      } catch { case e: Throwable =>
+        System.err.println(s"[conf] warmup $q/$vn failed: ${e.getMessage}") }
     }
 
     val samples = scala.collection.mutable.Map[(String, String), Vector[Double]]()
@@ -127,20 +93,10 @@ object ConfProbe {
          (vn, confs) <- (if (p % 2 == 0) variants.reverse else variants)) {
       withConfs(confs) {
         val t = try {
-          planned((q, vn)) match {
-            case (Pure, plan) =>
-              val t0 = System.nanoTime(); runPlan(plan)
-              (System.nanoTime() - t0) / 1e9
-            case (Clone, plan) =>
-              val c = PlanHonesty.prepareClone(plan)
-              val t0 = System.nanoTime(); runPlan(c)
-              (System.nanoTime() - t0) / 1e9
-            case (Rebuild, _) =>
-              val t0 = System.nanoTime()
-              runPlan(SparkEntry.queries(q)(spark, sfDir)
-                .queryExecution.executedPlan)
-              (System.nanoTime() - t0) / 1e9
-          }
+          val prep = prepared((q, vn))
+          val t0 = System.nanoTime()
+          Bench.runPlan(sc, prep.next())
+          (System.nanoTime() - t0) / 1e9
         } catch { case e: Throwable =>
           System.err.println(s"[conf] $q/$vn failed: ${e.getMessage}"); -1.0
         }

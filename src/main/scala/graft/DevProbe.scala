@@ -8,8 +8,9 @@ import org.apache.spark.sql.SparkSession
   * runJob-drain execution — so a plan change can be measured in seconds
   * instead of a full suite run. Numbers here correspond to Bench's
   * EAGER/REBUILD mode (builder + planning inside the timer); for a query
-  * Bench memoizes, expect this probe to read slightly hotter than
-  * bench_full.json, never cooler. (The r15 probe sweep retired this
+  * Bench re-plans from its optimized plan, expect this probe to read
+  * slightly hotter than bench_full.json (it also times the builder,
+  * analysis and optimization), never cooler. (The r15 probe sweep retired this
   * probe's noop-sink writes — ~0.1–0.2 s of write-command re-optimization
   * per pass charged to the operator — and its drifted session config:
   * cpus default 32 vs the bench's 4, no codegen-cache sizing.)

@@ -1,24 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SparkPlan
 
 /** Floor-profiling probe (not part of the contract): per-query job/stage/task
-  * census under the exact Bench execution scheme (memoized plan, timed cloned
-  * execution; same session config via [[Bench.buildSession]] — local[32] only
-  * when CENSUS-specific SPARK_GRAFT_CPUS asks for it). The per-query "floor"
-  * is scheduling overhead × jobs/stages — a query running 4+ sequential jobs
+  * census under the exact Bench execution scheme — each pass prepared by
+  * [[Bench.passes]] (re-planned from the optimized plan, or the builder
+  * re-invoked when it does the work) and timed the way Bench times it, under
+  * the same session config ([[Bench.buildSession]]; local[32] only when
+  * CENSUS-specific SPARK_GRAFT_CPUS asks for it). The per-query "floor" is
+  * scheduling overhead × jobs/stages — a query running 4+ sequential jobs
   * pays ~4× the ~80 ms/job local floor, so this census ranks the
   * floor-reduction targets the round-11 verdict asked for. Usage:
   * CENSUS_QUERIES="q_a,q_b" or default = every non-streaming query slower
   * than CENSUS_MIN (default 0.45 s) in bench_full.json.
   *
-  * Honesty mirrors Bench exactly: eager queries (q_dedup_components — the
-  * builder RUNS the fixpoint) are re-invoked per run with the builder inside
-  * the timed region; a clone that fails the reuseClosed gate (q_source_dpp's
-  * expression-embedded reuse) re-plans per run rather than stage-skipping
-  * through a cached exchange. Listener counters are read only after the bus
-  * quiesces (count stable across two samples), not after a fixed sleep —
-  * events arrive asynchronously on the listener-bus thread.
+  * Each query runs one untimed warm-up pass, then one counted pass. Listener
+  * counters are read only after the bus quiesces (count stable across two
+  * samples), not after a fixed sleep — events arrive asynchronously on the
+  * listener-bus thread.
   */
 object JobCensus {
   def main(args: Array[String]): Unit = {
@@ -39,11 +36,6 @@ object JobCensus {
           .toSeq.sortBy(-_._2).map(_._1).distinct
     }
 
-    def drain(it: Iterator[org.apache.spark.sql.catalyst.InternalRow]): Long = {
-      var n = 0L; while (it.hasNext) { it.next(); n += 1 }; n
-    }
-    def runPlan(plan: SparkPlan): Unit = sc.runJob(plan.execute(), drain _)
-
     @volatile var jobs = 0
     @volatile var stages = 0
     @volatile var tasks = 0
@@ -61,62 +53,16 @@ object JobCensus {
     // on a counter that never settled)
     def quiesce(): Unit = Bench.quiesceBus(() => (jobs, stages, tasks))
 
+    val builderJobs = Bench.jobCounter(sc)
     val rows = names.flatMap { n =>
       try {
-        val eagerName = Bench.isEager(n) // the bench's OWN predicate, not a copy
-        // memoize once for the lazy path; decide rebuild-vs-clone like Bench
-        val jobsBefore = if (eagerName) 0 else { quiesce(); jobs }
-        val plan =
-          if (eagerName) null
-          else SparkEntry.queries(n)(spark, sfDir).queryExecution.executedPlan
-        // builder-work detection, the bench's r17 rule (Bench.jobCounter
-        // scaladoc): a builder that launched jobs executed work the
-        // memoized plan would read from cache — rebuild per run, like Bench
-        val builderWork = !eagerName && { quiesce(); jobs > jobsBefore }
-        val eager = eagerName || builderWork
-        // full re-plan when the plan memoizes subquery futures: clone()
-        // does not clone expression-embedded subquery plans, so a clone
-        // would share the original's cached subquery results and the timed
-        // run would stage-skip that work (Bench's `stateful` condition —
-        // advisor r12 found the census checked only reuseClosed)
-        val stateful = !eager && plan.subqueriesAll.nonEmpty // tree-wide, like Bench
-        // Bench's exchange-free 'pure' path too: a plan with no exchange
-        // holds no cross-pass state, so Bench re-executes the SAME instance
-        // and skips the per-pass codegen-source regeneration (~30-80 ms on
-        // scan/project-shaped queries) — a census that cloned those ran
-        // systematically hotter than the bench time it ranks (r15 probe
-        // sweep), enough to pull a sub-threshold query into the census.
-        val pure = !eager && !stateful && !Bench.hasExchange(plan)
-        // the timed region matches Bench's exactly: the clone is a pure
-        // tree copy performed OUTSIDE the timer (Bench times only
-        // execute()+runJob); builder+planning are INSIDE it only for the
-        // eager/rebuild modes, where Bench re-plans per pass too
-        def timedRun(): Double =
-          if (eager || stateful) {
-            val t0 = System.nanoTime()
-            runPlan(SparkEntry.queries(n)(spark, sfDir).queryExecution.executedPlan)
-            (System.nanoTime() - t0) / 1e9
-          } else if (pure) {
-            val t0 = System.nanoTime()
-            runPlan(plan)
-            (System.nanoTime() - t0) / 1e9
-          } else {
-            val c = PlanHonesty.prepareClone(plan) // untimed, like Bench
-            if (PlanHonesty.reuseClosed(c)) {
-              val t0 = System.nanoTime()
-              runPlan(c)
-              (System.nanoTime() - t0) / 1e9
-            } else { // Bench's rebuild fallback: full re-plan, never stage-skip
-              val t0 = System.nanoTime()
-              runPlan(SparkEntry.queries(n)(spark, sfDir).queryExecution.executedPlan)
-              (System.nanoTime() - t0) / 1e9
-            }
-          }
-        timedRun() // warm
+        val p = Bench.passes(spark, sfDir, n, builderJobs)
+        Bench.runPlan(sc, p.warm())
         quiesce()
         jobs = 0; stages = 0; tasks = 0
-        // for eager queries the BUILDER is the work — timed, as Bench does
-        val sec = timedRun()
+        val t0 = System.nanoTime()
+        Bench.runPlan(sc, p.next())
+        val sec = (System.nanoTime() - t0) / 1e9
         quiesce()
         Some((n, sec, jobs, stages, tasks))
       } catch {

@@ -32,6 +32,20 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   *  - `spark.sql.windowExec.buffer.{in.memory,spill}.threshold` — window
   *    partition buffers move to UnsafeExternalSorter after N rows and
   *    FORCE a disk spill after M — the real spill-file write+readback.
+  *    N = 2. M is bounded on both sides. A window partition of n rows
+  *    writes (n - 1) / M spill files (the first when row M + 1 comes
+  *    in), and reading them back opens every file of the partition at
+  *    once, each holding two 1 MiB heap read-ahead buffers (and a 1 MiB
+  *    direct one). By that count, at sf0.001 and M = 4 q_hist_equidepth
+  *    writes 846 files over the 1,040 price bands of its 4-task banded
+  *    stage, plus 259 in each 1,040-row per-band-count window, and the
+  *    test JVM died of an OOM in the "read-ahead" threads at 3g. M = 8
+  *    writes 141 band files and 129 per 1,040-row window, and passes at
+  *    2g and at 3g. M must also
+  *    stay below the largest window partition of every query named
+  *    below, so that each still writes a spill file: q_win_running_sum's
+  *    largest o_custkey partition is 18 rows, so M <= 17; at M = 8 it
+  *    writes 105 files over its 150 customers.
   *  - `spark.sql.sessionWindow.buffer.*` — the native batch session_window
   *    merge buffer takes the same sorter path (q_ts_session_native).
   *  - `spark.sql.sortMergeJoinExec.buffer.*` + broadcast disabled — the
@@ -57,12 +71,12 @@ class SpillSpec extends SparkSuite {
     // ObjectHashAggregate (TypedImperativeAggregate buffers: sketches,
     // collect_set) falls back to sort-based after 2 in-memory keys
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "2",
-    // thresholds sized to the sf0.001 fixture's PER-PARTITION row counts
-    // (user_id window partitions run ~5-30 rows): 8/32 never tripped for
-    // q_win_running_sum alone — exactly the silent no-op the per-family
-    // asserts below exist to catch
+    // spill threshold sized to the sf0.001 fixture's PER-PARTITION row
+    // counts: below q_win_running_sum's largest partition (18 rows), high
+    // enough that q_hist_equidepth's spill files read back within a 2g
+    // heap (M's bounds: scaladoc)
     "spark.sql.windowExec.buffer.in.memory.threshold" -> "2",
-    "spark.sql.windowExec.buffer.spill.threshold" -> "4",
+    "spark.sql.windowExec.buffer.spill.threshold" -> "8",
     "spark.sql.sessionWindow.buffer.in.memory.threshold" -> "2",
     "spark.sql.sessionWindow.buffer.spill.threshold" -> "4",
     "spark.sql.sortMergeJoinExec.buffer.in.memory.threshold" -> "1",

@@ -43,7 +43,9 @@ class StagedSpec extends SparkSuite {
     val agg = staged.groupBy("k").agg(sum("v"))
     // a partitioning-blind bridge (the first cut's UnknownPartitioning)
     // would re-shuffle here; fromStaged must carry hashpartitioning(k)
-    assert(!Bench.hasExchange(agg.queryExecution.executedPlan),
+    assert(agg.queryExecution.executedPlan.collect {
+        case e: org.apache.spark.sql.execution.exchange.Exchange => e
+      }.isEmpty,
       "groupBy over the staged relation re-introduced an Exchange — the " +
         "bridge lost the source partitioning")
   }
