@@ -62,10 +62,36 @@ object Tables {
     sessionScoped.add(m); m
   }
 
+  /** The columnar-cached artifacts [[parquetArtifact]] made, per (session,
+    * parquet dir): [[dropMemo]] unpersists them before it drops the keys. */
+  private val cachedArtifacts = registerSessionScoped(
+    new java.util.concurrent.ConcurrentHashMap[(Long, String), DataFrame]())
+
+  /** A write-once artifact stored once as parquet under [[Scratch]] (reaped
+    * at exit) and served from a MEMORY_AND_DISK columnar cache of its
+    * read-back. The cache holds compressed column batches, not row objects
+    * (the order-graph edge list: 6.7 MB cached against 103 MB as a
+    * localCheckpoint at sf0.1), and its lineage is a bare parquet scan, so
+    * nothing of the build (its broadcasts, its shuffles) stays reachable.
+    * Unlike a localCheckpoint, the parquet copy outlives the executor that
+    * wrote it: a lost cache block is re-read, not lost. Where [[Scratch]]
+    * picks `/dev/shm`, that copy is memory too, outside the heap. */
+  private[graft] def parquetArtifact(spark: SparkSession, df: DataFrame,
+      prefix: String): DataFrame = {
+    val path = Scratch.dir(prefix)
+    df.write.mode("overwrite").parquet(path)
+    val cached = spark.read.parquet(path)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    cached.count()
+    cachedArtifacts.put((sessionId(spark), path), cached)
+    cached
+  }
+
   /** Release a retired session's memoized plans and artifacts
     * (multi-session hosts). */
   def dropMemo(spark: SparkSession): Unit = {
     val id = sessionId(spark)
+    cachedArtifacts.forEach((k, df) => if (k._1 == id) df.unpersist())
     memo.keySet.removeIf(_._1 == id)
     sessionScoped.forEach(m =>
       m.keySet.removeIf(k => k.productElement(0) == id))

@@ -20,9 +20,9 @@ import org.apache.spark.sql.functions._
   * reduction order); the rounding the fixed point introduces per iteration
   * is ~1e-9 relative — far below any ranking-relevant difference.
   *
-  * Scale shape: the edge list is the ingested graph — a write-once artifact
-  * (localCheckpoint here; a parquet edge table in production, the
-  * BucketedLayout discipline). Each iteration is one broadcast of the
+  * Scale shape: the edge list is the ingested graph — a write-once parquet
+  * edge table, served from a compressed columnar cache of its read-back
+  * ([[orderGraph]]). Each iteration is one broadcast of the
   * node-sized (pr, deg) relation, a map-side edge join, and ONE dst-keyed
   * exchange of slim (dst, contrib) rows with map-side partial sums. At node
   * counts beyond broadcast range the per-iteration join becomes a src-keyed
@@ -31,10 +31,20 @@ import org.apache.spark.sql.functions._
 object Graph {
   import Tables.table
 
-  /** (edges, degrees), materialized once per (session, sf-dir): the graph
-    * ingest (a fact-fact join + distinct + symmetrization) is the offline
-    * artifact every graph query starts from. Oracle twins re-derive it
-    * inline, so the gate pins the ingest math too. */
+  /** (edges, degrees), built once per (session, sf-dir): the graph ingest
+    * (a fact-fact join + distinct + symmetrization) is the offline artifact
+    * every graph query starts from. Oracle twins re-derive it inline, so the
+    * gate pins the ingest math too.
+    *
+    * `edges (src, dst, sd)` carries the SOURCE degree (sd): per-iteration
+    * contributions then need only the node-sized (node, pr) broadcast — no
+    * degree re-join inside the loop. `sd` is a src-partitioned window count,
+    * so the orders⋈lineitem join and its distinct run once, in the one job
+    * that writes `edges`; `deg (node, d)` is then counted from the stored
+    * edge table, never from the join. Both are [[Tables.parquetArtifact]]s:
+    * parquet under [[graft.Scratch]], served from a MEMORY_AND_DISK
+    * columnar cache — every superstep of the iterative queries reads
+    * cached column batches instead of decoding parquet again. */
   private val graphMemo =
     graft.Tables.registerSessionScoped(new java.util.concurrent.ConcurrentHashMap[(Long, String), (DataFrame, DataFrame)]())
 
@@ -46,18 +56,13 @@ object Graph {
         .distinct()
       val sym = base.select(col("c").as("src"), col("s").as("dst"))
         .unionAll(base.select(col("s").as("src"), col("c").as("dst")))
-      val deg = sym.groupBy("src").agg(count(lit(1)).as("d"))
-        .withColumnRenamed("src", "node")
-        .localCheckpoint(true)
-      // the edge artifact carries the SOURCE degree (sd): per-iteration
-      // contributions then need only the node-sized (node, pr) broadcast —
-      // no degree re-join inside the loop, and the three iterations'
-      // broadcasts are structurally distinct relations (p0/p1/p2), so the
-      // physical plan has no duplicated subtree and stays clone-safe for
-      // the bench's plan-memoization path
-      val edges = sym
-        .join(deg.select(col("node").as("src"), col("d").as("sd")), "src")
-        .localCheckpoint(true)
+      val edges = Tables.parquetArtifact(s,
+        sym.select(col("src"), col("dst"), count(lit(1))
+          .over(org.apache.spark.sql.expressions.Window.partitionBy("src")).as("sd")),
+        "graft_graph_edges")
+      val deg = Tables.parquetArtifact(s,
+        edges.groupBy("src").agg(count(lit(1)).as("d")).withColumnRenamed("src", "node"),
+        "graft_graph_deg")
       (edges, deg)
     })
 

@@ -208,7 +208,7 @@ object PacketParse {
 
   /** One fused pass: [[PacketFields]] evaluates once per row (the optimizer
     * keeps the expensive struct-producing projection separate from the
-    * 20-field extraction above it — CollapseProject refuses to duplicate a
+    * 24-field extraction above it — CollapseProject refuses to duplicate a
     * non-cheap expression — and whole-stage codegen fuses both into one
     * stage), replacing the ~15 regex executions per row of the original
     * expression-tree formulation. The numeric fields come out of the struct
@@ -217,38 +217,42 @@ object PacketParse {
     * field off the air would KILL the stream, and try_cast nulls it instead —
     * and keeping the cast at this layer pins cast semantics bit-for-bit to
     * the replaced regexp_extract formulation (StreamingSpec's malformed
-    * telemetry/weather fixtures, Round7Spec's format∘parse identity). */
+    * telemetry/weather fixtures, Round7Spec's format∘parse identity).
+    * The parsed fields are appended to `lines`' columns, so `lines` must not
+    * already carry a column of the same name. */
   def parse(lines: DataFrame, raw: String = "raw"): DataFrame = {
     import org.apache.spark.sql.graft.ColumnBridge
     val pf = ColumnBridge.column(PacketFields(ColumnBridge.expression(col(raw))))
-    lines
-      .withColumn("_pf", pf)
-      .withColumn("callsign", col("_pf.callsign"))
-      .withColumn("path", col("_pf.path"))
-      .withColumn("payload", col("_pf.payload"))
-      .withColumn("dti", col("_pf.dti"))
-      .withColumn("lat", col("_pf.lat"))
-      .withColumn("lon", col("_pf.lon"))
-      // null raw → null struct → coalesce reproduces the classifier's
-      // otherwise("other") branch
-      .withColumn("packet_type", coalesce(col("_pf.packet_type"), lit("other")))
-      .withColumn("obj_name", col("_pf.obj_name"))
-      .withColumn("obj_killed", col("_pf.obj_killed"))
-      .withColumn("tlm_seq", expr("try_cast(_pf.tlm_seq_s AS INT)"))
-      .withColumn("tlm_a1", expr("try_cast(_pf.tlm_a1_s AS DOUBLE)"))
-      .withColumn("tlm_bits", col("_pf.tlm_bits"))
-      .withColumn("wx_wind_dir", expr("try_cast(_pf.wx_dir_s AS INT)"))
-      .withColumn("wx_wind_speed", expr("try_cast(_pf.wx_speed_s AS INT)"))
-      .withColumn("wx_gust", expr("try_cast(_pf.wx_gust_s AS INT)"))
-      .withColumn("wx_temp_f", expr("try_cast(_pf.wx_temp_s AS INT)"))
-      .withColumn("msg_addressee", col("_pf.msg_addressee"))
-      .withColumn("msg_text", col("_pf.msg_text"))
-      .withColumn("status_text", col("_pf.status_text"))
-      .withColumn("grid", col("_pf.grid"))
-      .withColumn("mice_speed", col("_pf.mice_speed"))
-      .withColumn("mice_course", col("_pf.mice_course"))
-      .withColumn("tp_callsign", col("_pf.tp_callsign"))
-      .withColumn("pos_ambiguity", col("_pf.pos_ambiguity"))
+    // one projection for the 24 fields (a withColumn chain re-analyzes the
+    // growing plan once per call), over `_pf`'s own child projection
+    lines.select(col("*"), pf.as("_pf"))
+      .select(col("*"),
+        col("_pf.callsign").as("callsign"),
+        col("_pf.path").as("path"),
+        col("_pf.payload").as("payload"),
+        col("_pf.dti").as("dti"),
+        col("_pf.lat").as("lat"),
+        col("_pf.lon").as("lon"),
+        // null raw → null struct → coalesce reproduces the classifier's
+        // otherwise("other") branch
+        coalesce(col("_pf.packet_type"), lit("other")).as("packet_type"),
+        col("_pf.obj_name").as("obj_name"),
+        col("_pf.obj_killed").as("obj_killed"),
+        expr("try_cast(_pf.tlm_seq_s AS INT)").as("tlm_seq"),
+        expr("try_cast(_pf.tlm_a1_s AS DOUBLE)").as("tlm_a1"),
+        col("_pf.tlm_bits").as("tlm_bits"),
+        expr("try_cast(_pf.wx_dir_s AS INT)").as("wx_wind_dir"),
+        expr("try_cast(_pf.wx_speed_s AS INT)").as("wx_wind_speed"),
+        expr("try_cast(_pf.wx_gust_s AS INT)").as("wx_gust"),
+        expr("try_cast(_pf.wx_temp_s AS INT)").as("wx_temp_f"),
+        col("_pf.msg_addressee").as("msg_addressee"),
+        col("_pf.msg_text").as("msg_text"),
+        col("_pf.status_text").as("status_text"),
+        col("_pf.grid").as("grid"),
+        col("_pf.mice_speed").as("mice_speed"),
+        col("_pf.mice_course").as("mice_course"),
+        col("_pf.tp_callsign").as("tp_callsign"),
+        col("_pf.pos_ambiguity").as("pos_ambiguity"))
       .drop("_pf")
   }
 }

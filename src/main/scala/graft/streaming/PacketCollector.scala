@@ -47,11 +47,28 @@ object PacketCollector {
   /** The collector transform: production parse + ingest timestamp + station
     * bucket for sink partition pruning. Identical for both sources. */
   def pipeline(raw: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    PacketParse.parse(raw)
-      .withColumn("ingest_ts", current_timestamp())
-      .withColumn("station_bucket",
-        when(col("callsign") === "", lit("_"))
-          .otherwise(upper(substring(col("callsign"), 1, 1))))
+    PacketParse.parse(raw).select(col("*"),
+      current_timestamp().as("ingest_ts"),
+      when(col("callsign") === "", lit("_"))
+        .otherwise(upper(substring(col("callsign"), 1, 1))).as("station_bucket"))
+
+  /** The collector's sink: partitioned parquet, exactly once through the
+    * checkpoint. Each station_bucket is owned by ONE task per micro-batch
+    * before the partitioned write: without the repartition every task fans
+    * out across all ~38 bucket dirs, and at a 10 s trigger that is hundreds
+    * of thousands of tiny files a day (the Geo archive writer's lesson,
+    * applied to the live sink — r13 review). */
+  def sink(df: org.apache.spark.sql.DataFrame, outDir: String, ckptDir: String,
+      trigger: Trigger): org.apache.spark.sql.streaming.StreamingQuery =
+    df.repartition(col("station_bucket"))
+      .writeStream
+      .format("parquet")
+      .option("path", outDir)
+      .option("checkpointLocation", ckptDir)
+      .partitionBy("station_bucket")
+      .outputMode("append")
+      .trigger(trigger)
+      .start()
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 3 && !args.take(3).exists(_.startsWith("--")),
@@ -116,21 +133,8 @@ object PacketCollector {
         Some(("127.0.0.1", relay.localPort))
       } else None
 
-    // own each station_bucket in ONE task per micro-batch before the
-    // partitioned write: without the repartition every task fans out
-    // across all ~38 bucket dirs, and at a 10 s trigger that is hundreds
-    // of thousands of tiny files a day (the Geo archive writer's lesson,
-    // applied to the live sink — r13 review)
-    val query = pipeline(source(spark, inDir, sock))
-      .repartition(col("station_bucket"))
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", ckptDir)
-      .partitionBy("station_bucket")
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime("10 seconds"))
-      .start()
+    val query = sink(pipeline(source(spark, inDir, sock)), outDir, ckptDir,
+      Trigger.ProcessingTime("10 seconds"))
     query.awaitTermination()
   }
 }

@@ -56,4 +56,33 @@ class GraphSpec extends SparkSuite {
     assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1, plan)
     assert(!plan.contains("SortMergeJoin"), plan)
   }
+
+  test("order-graph artifact: equals the inline derivation, served as a cached parquet scan") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, LogicalRDD}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val (edges, deg) = operators.Graph.orderGraph(spark, sf)
+    // the derivation the artifact replaced: join → distinct → union → count
+    val base = Tables.table(spark, sf, "orders")
+      .join(Tables.table(spark, sf, "lineitem"), col("o_orderkey") === col("l_orderkey"))
+      .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
+      .distinct()
+    val sym = base.select(col("c").as("src"), col("s").as("dst"))
+      .unionAll(base.select(col("s").as("src"), col("c").as("dst")))
+    val d = sym.groupBy("src").agg(count(lit(1)).as("d")).withColumnRenamed("src", "node")
+    val e = sym.join(d.select(col("node").as("src"), col("d").as("sd")), "src")
+    assert(edges.columns.toSeq == Seq("src", "dst", "sd"))
+    assert(deg.columns.toSeq == Seq("node", "d"))
+    assert(edges.count() > 0 && deg.count() > 0)
+    assert(edges.exceptAll(e).isEmpty && e.exceptAll(edges).isEmpty)
+    assert(deg.exceptAll(d).isEmpty && d.exceptAll(deg).isEmpty)
+    Seq(edges, deg).foreach { a =>
+      val p = a.queryExecution.optimizedPlan
+      val cached = p.collect { case r: InMemoryRelation => r }
+      assert(cached.size == 1, p)
+      assert(cached.head.cachedPlan.collectFirst { case f: FileSourceScanExec => f }
+        .exists(_.relation.fileFormat.isInstanceOf[ParquetFileFormat]), cached.head.cachedPlan)
+      assert(p.collect { case r: LogicalRDD => r }.isEmpty, p)
+    }
+  }
 }

@@ -143,8 +143,10 @@ class PlanShapeSpec extends SparkSuite {
     // fold regressed), and never an edge-side shuffle join
     assert("BroadcastHashJoin".r.findAllIn(p).size == 2, p)
     assert(!p.contains("SortMergeJoin"), p)
-    // the memoized edge artifact appears as a checkpointed scan, not a live join
-    assert(p.contains("Scan ExistingRDD"), p)
+    // the write-once edge artifact appears as a cached scan of its parquet
+    // table, not a live orders⋈lineitem join
+    assert(p.contains("InMemoryTableScan"), p)
+    assert(!p.contains("lineitem"), p)
   }
 
   test("as-of joins (both directions) are single-window plans, no join operator") {

@@ -256,9 +256,19 @@ class Round13Spec extends SparkSuite {
     // memos, so clearing them mid-run only forces recomputation.
     Tables.table(spark, sf, "orders")
     graft.functions.DedupOps.ensureBands(spark, sf)
+    // and a columnar-cached parquet artifact: retiring the session must
+    // also release its cached blocks, not just forget the DataFrames
+    val (edges, deg) = operators.Graph.orderGraph(spark, sf)
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    def cached(df: org.apache.spark.sql.DataFrame) =
+      cacheManager.lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+    assert(cached(edges).nonEmpty && cached(deg).nonEmpty)
     assert(Tables.sessionScopedEntries(spark) > 0)
     Tables.dropMemo(spark)
     assert(Tables.sessionScopedEntries(spark) == 0)
+    assert(cached(edges).isEmpty, "dropMemo left the edge artifact cached")
+    assert(cached(deg).isEmpty, "dropMemo left the degree artifact cached")
     // and the caches simply refill on next use
     Tables.table(spark, sf, "orders")
     assert(Tables.sessionScopedEntries(spark) > 0)

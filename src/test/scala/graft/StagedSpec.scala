@@ -37,17 +37,28 @@ class StagedSpec extends SparkSuite {
   }
 
   test("eagerFold: staged relation keeps the source partitioning (no re-exchange)") {
-    val df = spark.range(200).select(col("id").as("k"), col("id").as("v"))
-      .repartition(4, col("k"))
-    val (staged, _) = Staged.eagerFold(df, "v", math.max)
-    val agg = staged.groupBy("k").agg(sum("v"))
-    // a partitioning-blind bridge (the first cut's UnknownPartitioning)
-    // would re-shuffle here; fromStaged must carry hashpartitioning(k)
-    assert(agg.queryExecution.executedPlan.collect {
-        case e: org.apache.spark.sql.execution.exchange.Exchange => e
-      }.isEmpty,
-      "groupBy over the staged relation re-introduced an Exchange — the " +
-        "bridge lost the source partitioning")
+    // AQE off, the Bench posture where the property is claimed: under AQE
+    // the executed plan is an AdaptiveSparkPlanExec leaf, which `collect`
+    // does not enter, so the assertion below would hold whatever the plan
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val df = spark.range(200).select(col("id").as("k"), col("id").as("v"))
+        .repartition(4, col("k"))
+      val (staged, _) = Staged.eagerFold(df, "v", math.max)
+      val agg = staged.groupBy("k").agg(sum("v"))
+      // a partitioning-blind bridge (the first cut's UnknownPartitioning)
+      // would re-shuffle here; fromStaged must carry hashpartitioning(k)
+      assert(agg.queryExecution.executedPlan.collect {
+          case e: org.apache.spark.sql.execution.exchange.Exchange => e
+        }.isEmpty,
+        "groupBy over the staged relation re-introduced an Exchange — the " +
+          "bridge lost the source partitioning")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("hits and components: fused and legacy shapes return identical rows") {

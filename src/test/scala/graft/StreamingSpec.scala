@@ -604,4 +604,96 @@ class StreamingSpec extends SparkSuite {
     assert(metricKeys.exists(_.startsWith("rocksdb")),
       s"no rocksdb* custom metric in ${metricKeys.mkString(",")}")
   }
+
+  /** Lines from this spec's fixtures: every payload family the parse tests
+    * above pin, plus noise and a malformed analog. */
+  private val fixtureLines = Seq(
+    "N0CALL>APRS,WIDE1-1:!4903.50N/07201.75W-test comment",
+    "DB0XYZ-10>APDG03,TCPIP*:=5230.25S/01323.50E#",
+    "garbage with no structure",
+    "K1ABC-9>APDR16,TCPIP*:=3725.00N/12200.00W>",
+    "N0CALL>APRS:@092345z4903.50N/07201.75W>mobile",
+    "W1AW>APRS,TCPIP*::K1ABC-9  :hello there{001",
+    "DB0XYZ>APRS:>station up and running",
+    "K2DEF>APRS:!4741.10N/12217.50W-Seattle area",
+    "N0CALL>APRS:;LEADER   *092345z4903.50N/07201.75W>chase car",
+    "N0CALL>APRS:;OLDOBJ   _092345z4903.50N/07201.75W>gone",
+    "W1AW>APRS:T#005,199.9,27.0,3.5,12.1,0.0,10110001",
+    "K7WX>APRS:_10090556c220s004g005t077r000p000P000h50b09900",
+    "K7BAD>APRS:_10090556c...s...g...t077r000",
+    "W2BAD>APRS:T#12,bogus,1,2,3,4,00000000",
+    "N0BAD>APRS:!9999.99N/19999.99W-junk")
+
+  test("packet parse: one projection, same schema, rows and optimized plan as the withColumn chain") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.graft.ColumnBridge
+    // the parse as a chain of withColumn calls, the shape it replaced
+    def chained(lines: DataFrame): DataFrame = {
+      val pf = ColumnBridge.column(
+        graft.streaming.PacketFields(ColumnBridge.expression(col("raw"))))
+      val fields = Seq("callsign", "path", "payload", "dti", "lat", "lon")
+        .map(f => f -> col(s"_pf.$f")) ++
+        Seq("packet_type" -> coalesce(col("_pf.packet_type"), lit("other")),
+          "obj_name" -> col("_pf.obj_name"), "obj_killed" -> col("_pf.obj_killed"),
+          "tlm_seq" -> expr("try_cast(_pf.tlm_seq_s AS INT)"),
+          "tlm_a1" -> expr("try_cast(_pf.tlm_a1_s AS DOUBLE)"),
+          "tlm_bits" -> col("_pf.tlm_bits"),
+          "wx_wind_dir" -> expr("try_cast(_pf.wx_dir_s AS INT)"),
+          "wx_wind_speed" -> expr("try_cast(_pf.wx_speed_s AS INT)"),
+          "wx_gust" -> expr("try_cast(_pf.wx_gust_s AS INT)"),
+          "wx_temp_f" -> expr("try_cast(_pf.wx_temp_s AS INT)")) ++
+        Seq("msg_addressee", "msg_text", "status_text", "grid", "mice_speed",
+          "mice_course", "tp_callsign", "pos_ambiguity").map(f => f -> col(s"_pf.$f"))
+      fields.foldLeft(lines.withColumn("_pf", pf)) { case (d, (n, c)) => d.withColumn(n, c) }
+        .drop("_pf")
+    }
+    // a real text scan: a LocalRelation would be constant-folded whole
+    val in = Files.createTempDirectory("graft_parse_eq").toString
+    Files.writeString(java.nio.file.Path.of(in, "lines.txt"), fixtureLines.mkString("", "\n", "\n"))
+    val lines = spark.read.text(in).withColumnRenamed("value", "raw")
+    val got = PacketParse.parse(lines)
+    val want = chained(lines)
+    assert(got.schema == want.schema)
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    assert(got.count() == fixtureLines.size)
+    val plan = got.queryExecution.optimizedPlan
+    assert("graft_packet_fields\\(".r.findAllIn(plan.toString).size == 1, plan)
+    assert(plan.sameResult(want.queryExecution.optimizedPlan),
+      s"optimized plans differ:\n$plan\n${want.queryExecution.optimizedPlan}")
+  }
+
+  test("collector sink: source → pipeline → sink writes one file per station_bucket per batch") {
+    // two drop files, each holding every bucket, read as two input splits of
+    // one AvailableNow batch: without the sink's repartition each split would
+    // write its own file into every bucket dir
+    val in = Files.createTempDirectory("graft_sink_in").toString
+    val out = Files.createTempDirectory("graft_sink_out").toString
+    val ckpt = Files.createTempDirectory("graft_sink_ckpt").toString
+    (0 until 2).foreach { f =>
+      Files.writeString(java.nio.file.Path.of(in, s"feed$f.txt"),
+        (fixtureLines ++ fixtureLines.map(l => s"Q$f$l")).mkString("", "\n", "\n"))
+    }
+    import graft.streaming.PacketCollector
+    PacketCollector.sink(PacketCollector.pipeline(PacketCollector.source(spark, in, None)),
+      out, ckpt, org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .awaitTermination()
+    val res = spark.read.parquet(out)
+    assert(res.count() == 4L * fixtureLines.size)
+    assert(res.columns.contains("ingest_ts"))
+    // each committed file's batch, from the sink's own log
+    val log = new java.io.File(out, "_spark_metadata")
+    val perBatch = log.listFiles().filter(_.getName.forall(_.isDigit)).toSeq.map { b =>
+      val files = scala.io.Source.fromFile(b).getLines().drop(1)
+        .map(l => "\"path\":\"([^\"]+)\"".r.findFirstMatchIn(l).get.group(1)).toSeq
+      b.getName -> files
+    }
+    assert(perBatch.nonEmpty)
+    perBatch.foreach { case (batch, files) =>
+      val byBucket = files.groupBy(f => "station_bucket=[^/]+".r.findFirstIn(f).get)
+      assert(byBucket.size > 2, s"batch $batch wrote only ${byBucket.keys}")
+      byBucket.foreach { case (bucket, fs) =>
+        assert(fs.size == 1, s"batch $batch wrote ${fs.size} files into $bucket: $fs")
+      }
+    }
+  }
 }
