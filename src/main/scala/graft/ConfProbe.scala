@@ -5,18 +5,19 @@ package graft
   * variant is a `;`-joined `k=v` list applied via spark.conf.set BEFORE the
   * variant's plans are built (shuffle width, broadcast threshold, … —
   * anything read at planning time; context-level confs need separate JVMs
-  * and are out of scope). The special pseudo-conf `sysprop:<key>=<v>`
-  * sets a JVM system property instead (the spread-width knob). Timed
-  * passes are INTERLEAVED across variants (v1 pass1, v2 pass1, v1 pass2,
-  * …) so a host stall poisons one sample of each arm, not one whole arm —
-  * the same discipline as Bench's round-robin. The re-plan is
-  * non-adaptive, so an AQE-on variant is not expressible.
+  * and are out of scope). Timed passes are INTERLEAVED across variants
+  * (v1 pass1, v2 pass1, v1 pass2, …) so a host stall poisons one sample of
+  * each arm, not one whole arm — the same discipline as Bench's
+  * round-robin. The re-plan is non-adaptive, so an AQE-on variant is not
+  * expressible.
   *
   * Usage:
   *   CONF_VARIANTS="base=|w4=spark.sql.shuffle.partitions=4" \
   *   CONF_QUERIES="q_a,q_b" CONF_PASSES=5 \
   *   sbt "runMain graft.ConfProbe <sfDir>"
-  * (variant syntax: `name=k=v;k=v`, empty conf list = baseline)
+  * (variant syntax: `name=k=v;k=v`, empty conf list = baseline). With
+  * CONF_VARIANTS unset it runs the one `base=` variant: single-query timing
+  * under Bench's pass rule.
   *
   * Delimiter limits (advisor r16): conf VALUES containing ';' or '|' are
   * inexpressible (the split runs before k=v parsing) and a key repeated
@@ -46,23 +47,11 @@ object ConfProbe {
         }
 
     def withConfs[A](confs: Seq[(String, String)])(body: => A): A = {
-      val prev = confs.map {
-        case (k, _) if k.startsWith("sysprop:") =>
-          k -> sys.props.get(k.stripPrefix("sysprop:"))
-        case (k, _) => k -> spark.conf.getOption(k)
-      }
-      confs.foreach {
-        case (k, v) if k.startsWith("sysprop:") =>
-          sys.props(k.stripPrefix("sysprop:")) = v
-        case (k, v) => spark.conf.set(k, v)
-      }
-      try body finally prev.zip(confs).foreach {
-        case ((k, old), _) if k.startsWith("sysprop:") =>
-          val pk = k.stripPrefix("sysprop:")
-          old match { case Some(v) => sys.props(pk) = v
-                      case None => sys.props.remove(pk) }
-        case ((k, Some(v)), _) => spark.conf.set(k, v)
-        case ((k, None), _) => spark.conf.unset(k)
+      val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
       }
     }
 

@@ -173,17 +173,13 @@ object Tables {
   def spreadWide(spark: SparkSession, df: DataFrame): DataFrame =
     df.repartition(spark.sparkContext.defaultParallelism)
 
-  /** [[spread]]'s width rule, with a dev-probe override (SPROBE_SPREAD env /
-    * graft.probe.spread sysprop) so the width can be A/B'd under the real
-    * query code — the same pattern as StreamQueries' SPROBE_SHUFFLE knob: a
-    * probe that re-implemented the pipelines at another width would drift
-    * from what the gated queries actually run. */
+  /** [[spread]]'s width rule: the session's shuffle width, capped at the
+    * cores. To try another width, set `spark.sql.shuffle.partitions` on the
+    * session (ConfProbe's variants do exactly that). */
   private[graft] def spreadWidth(spark: SparkSession): Int =
-    sys.props.get("graft.probe.spread").orElse(sys.env.get("SPROBE_SPREAD"))
-      .flatMap(s => scala.util.Try(s.toInt).toOption)
-      .getOrElse(math.min(
-        spark.sessionState.conf.numShufflePartitions,
-        spark.sparkContext.defaultParallelism))
+    math.min(
+      spark.sessionState.conf.numShufflePartitions,
+      spark.sparkContext.defaultParallelism)
 }
 
 /** Timestamp-type portability helpers. The driver-generated fixtures have

@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   * bench times (Bench.buildSession — shuffle width, AQE off, UTC). Eager
   * queries (streaming pipelines, superstep builders) are skipped by default:
   * their builders EXECUTE inside the planning call, and their read-back plan
-  * is a bare scan with no optimization surface (same predicate as PlanSweep).
+  * is a bare scan with no optimization surface ([[Bench.isEager]]).
   * Pass query names as trailing args to dump only those (including eager
   * ones, whose read-back plan is then captured after the builder runs).
   *

@@ -25,17 +25,13 @@ import org.apache.spark.storage.StorageLevel
   * discipline), so the fold is order-insensitive by construction and
   * `Math.addExact`-style ops keep ANSI's loud-overflow behavior.
   *
-  * The legacy two-job shapes stay selectable via `graft.probe.stagefold=off`
-  * (sysprop; SPROBE_STAGEFOLD env) — the r16 spread-width pattern: the
-  * probe override is how the before/after plan corpus and the ConfProbe
-  * head-to-head are generated against the SAME query code.
+  * HITS and the components fixpoint run only this fused shape. The two-job
+  * shapes it replaced, and their measured head-to-head, are recorded in
+  * OPTIMIZATION_r17.md. StagedSpec pins the fold against the aggregates it
+  * replaced; StagedSpec (components) and Round12Spec (HITS) pin the
+  * consumers' results against driver-side references.
   */
 object Staged {
-
-  private[graft] def fuseEnabled: Boolean =
-    sys.props.get("graft.probe.stagefold")
-      .orElse(sys.env.get("SPROBE_STAGEFOLD"))
-      .forall(_ != "off")
 
   /** Materialize `df` (cached like localCheckpoint(true): internal rows,
     * MEMORY_AND_DISK) and fold `op` over the non-null values of LONG column

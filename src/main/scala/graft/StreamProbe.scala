@@ -1,12 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev-only streaming cost decomposition (companion to BenchProbe/DevProbe):
-  * runs one gated streaming query and prints every micro-batch's
-  * durationMs map from StreamingQueryProgress — the ground truth for where
-  * an AvailableNow pass spends its time (triggerExecution, queryPlanning,
-  * walCommit, stateStore commit, addBatch). Not part of the driver contract.
+/** Dev-only streaming cost decomposition: runs gated streaming queries and
+  * prints every micro-batch's durationMs map from StreamingQueryProgress —
+  * the ground truth for where an AvailableNow pass spends its time
+  * (triggerExecution, queryPlanning, walCommit, stateStore commit,
+  * addBatch). Runs on the bench session ([[Bench.buildSession]],
+  * SPARK_GRAFT_CPUS cores), two passes per query, so pass 2 is the warm
+  * one. Not part of the driver contract.
   *
   * Usage: runMain graft.StreamProbe <sfDir> <query> [<query> ...]
   * (multiple queries share one JVM/session — r17: a per-query JVM paid
@@ -16,14 +16,7 @@ object StreamProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val qnames = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", math.max(4, math.min(cpus.toInt, 8)).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", Scratch.dir("graft_wh"))
-      .getOrCreate()
+    val spark = Bench.buildSession()
     spark.sparkContext.setLogLevel("WARN")
     val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
       import org.apache.spark.sql.streaming.StreamingQueryListener._
@@ -37,18 +30,7 @@ object StreamProbe {
         println(s"[sprobe] terminated")
     }
     spark.streams.addListener(listener)
-    sys.env.get("SPROBE_SHUFFLE").foreach(n =>
-      spark.conf.set("spark.sql.shuffle.partitions", n))
-    // A/B knob: extra session confs, "k=v;k=v" (same convention as
-    // Verify's SPARK_GRAFT_EXTRA_CONF) — lets the probe sweep streaming
-    // state-format/provider confs the gated queries would pick up.
-    sys.env.getOrElse("SPROBE_EXTRA", "").split(';').filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      }
-    val passes = sys.env.getOrElse("SPROBE_PASSES", "2").toInt
-    for (name <- qnames; pass <- 1 to passes) {
+    for (name <- qnames; pass <- 1 to 2) {
       println(s"[sprobe] === $name pass $pass ===")
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(name)(spark, sfDir)

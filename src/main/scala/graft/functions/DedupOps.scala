@@ -87,7 +87,7 @@ object DedupOps {
         .localCheckpoint(true)
     })
 
-  private def lshBands(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def lshBands(s: SparkSession, dir: String): DataFrame = {
     val bandCols = (0 until NumHashes / BandSize).map { b =>
       concat((lit(s"$b|") +: (0 until BandSize).map(j => col(s"m${b * BandSize + j}"))): _*)
     }
@@ -114,16 +114,12 @@ object DedupOps {
     // replaced sum() agg; None (empty relation) maps to the coalesce(sum,0)
     // the agg shape used — sum over ZERO rows was NULL and getLong would
     // NPE on an empty documents table (the oracle twin returns its empty
-    // relation fine). Legacy shape behind graft.probe.stagefold=off.
+    // relation fine).
     def stagedLabels(df: org.apache.spark.sql.DataFrame)
-        : (org.apache.spark.sql.DataFrame, Long) =
-      if (graft.Staged.fuseEnabled) {
-        val (staged, s) = graft.Staged.eagerFold(df, "lbl", Math.addExact)
-        (staged, s.getOrElse(0L))
-      } else {
-        val staged = df.localCheckpoint()
-        (staged, staged.agg(coalesce(sum("lbl"), lit(0L))).head.getLong(0))
-      }
+        : (org.apache.spark.sql.DataFrame, Long) = {
+      val (staged, s) = graft.Staged.eagerFold(df, "lbl", Math.addExact)
+      (staged, s.getOrElse(0L))
+    }
     var (labels, curSum) = stagedLabels(
       table(s, dir, "documents").select(col("doc_id"), col("doc_id").as("lbl")))
     var prevSum = Long.MinValue

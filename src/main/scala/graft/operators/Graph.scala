@@ -933,29 +933,19 @@ object Graph {
         // 76 stages / 1.4 s vs 11 jobs / 0.35 s materialized). Eagerness
         // is declared to the bench (Bench.isEager), which re-runs the
         // full pipeline every timed pass.
-        // r17 staged-fold fusion: the half-step materialization job now
+        // r17 staged-fold fusion: the half-step materialization job
         // computes its own normalization max (graft.Staged scaladoc), so a
         // half-step costs ONE job instead of materialize + broadcast-max —
-        // 4 of the query's 12 jobs removed. Head-to-head (ConfProbe,
-        // interleaved sysprop arms, numbers in OPTIMIZATION_r17.md): the
-        // fused shape wins; the legacy crossJoin(broadcast(max)) shape
-        // stays reachable via graft.probe.stagefold=off. The max is the
-        // same LONG the broadcast carried, so floor(v/max·2^20 + 0.5) is
-        // bit-identical.
+        // 4 of the query's 12 jobs removed (the head-to-head against the
+        // crossJoin(broadcast(max)) shape is in OPTIMIZATION_r17.md). The
+        // max is the same LONG the broadcast carried, so
+        // floor(v/max·2^20 + 0.5) is bit-identical.
         def norm(df: org.apache.spark.sql.DataFrame, key: String, v: String) = {
-          if (graft.Staged.fuseEnabled) {
-            val (staged, mx) = graft.Staged.eagerFold(df, v, math.max)
-            val mxCol = lit(mx.map(java.lang.Long.valueOf).orNull).cast("long")
-            staged.select(col(key),
-              floor(col(v).cast("double") / mxCol.cast("double") *
-                sc.cast("double") + lit(0.5d)).cast("long").as("score"))
-          } else {
-            val staged = df.localCheckpoint(true)
-            staged.crossJoin(broadcast(staged.agg(max(col(v)).as("mx"))))
-              .select(col(key),
-                floor(col(v).cast("double") / col("mx").cast("double") *
-                  sc.cast("double") + lit(0.5d)).cast("long").as("score"))
-          }
+          val (staged, mx) = graft.Staged.eagerFold(df, v, math.max)
+          val mxCol = lit(mx.map(java.lang.Long.valueOf).orNull).cast("long")
+          staged.select(col(key),
+            floor(col(v).cast("double") / mxCol.cast("double") *
+              sc.cast("double") + lit(0.5d)).cast("long").as("score"))
         }
         // auth⁰ ≡ 2^20 ⇒ hub¹_raw(c) = deg(c)·2^20
         val hub1 = norm(be.groupBy("c").agg((count(lit(1)) * sc).as("hr")),

@@ -121,8 +121,13 @@ object StreamQueries {
     // Applies to NEW checkpoints only, which every gated run creates.
     "spark.sql.streaming.join.stateFormatVersion" -> "3")
 
+  /** Runs `body` with the stream state-store confs and a stream-state
+    * shuffle width of `width` (default 2, measured best for these state
+    * sizes: swept 1/2/4, docs/SCALE.md), restoring the session's own values
+    * afterwards. The width overrides the session's
+    * `spark.sql.shuffle.partitions` for the pipeline's duration. */
   private[graft] def withStreamConf[A](spark: org.apache.spark.sql.SparkSession,
-      width: Int = StreamShuffleWidth)(body: => A): A = {
+      width: Int = 2)(body: => A): A = {
     val confs = Seq(
       "spark.sql.shuffle.partitions" -> width.toString,
       "spark.sql.streaming.stateStore.providerClass" -> StateStoreProvider) ++
@@ -134,24 +139,6 @@ object StreamQueries {
       case (k, None) => spark.conf.unset(k)
     }
   }
-
-  /** Stream-state shuffle width — default 2 (measured best for these state
-    * sizes), overridable via SPROBE_SHUFFLE so StreamProbe's sweep knob
-    * tunes the SAME setting the gated stream queries run with (previously
-    * the hard-coded 2 silently overrode the probe's session-level set). */
-  private def StreamShuffleWidth: Int = widthOr(2)
-
-  /** SPROBE_SHUFFLE (env) / graft.probe.streamwidth (sysprop, for same-JVM
-    * ConfProbe sweeps) wins over any per-query default — a hard-coded width
-    * would silently no-op the probe's sweep, the exact bug this knob was
-    * introduced to fix (r13 review caught the dupe filter's literal 4
-    * reintroducing it). Re-read per call (not lazy): a frozen first read
-    * would pin every later sweep variant to the first one's width. */
-  private def widthOr(default: Int): Int =
-    sys.props.get("graft.probe.streamwidth")
-      .orElse(sys.env.get("SPROBE_SHUFFLE"))
-      .flatMap(s => scala.util.Try(s.toInt).toOption)
-      .getOrElse(default)
 
   val all: Seq[GraftQuery] = Seq(
     GraftQuery(
@@ -275,7 +262,7 @@ object StreamQueries {
         // (~190k sessions vs the other streams' thousands of windows), so
         // the state store is the widest in the suite (StreamProbe sweep:
         // 2.86 s @2, 2.34 s @4, 2.50 s @8)
-        withStreamConf(spark, widthOr(4)) {
+        withStreamConf(spark, 4) {
           EventStream.writeParquet(
             EventStream.dupeFilterCounts(
               EventStream.readEvents(spark, duplicatedDropDir(spark, dir))),

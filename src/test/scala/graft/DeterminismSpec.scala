@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
+import scala.jdk.CollectionConverters._
+
 /** The no-nondeterministic-expression invariant, as a gate (r15 verdict #2).
   *
   * The engine's recomputation-safety story — task retries and speculative
@@ -41,5 +43,29 @@ class DeterminismSpec extends SparkSuite {
     assert(offenders.isEmpty,
       "nondeterministic expressions break task-retry/speculation safety " +
         "(recomputed partitions would diverge):\n" + offenders.mkString("\n"))
+  }
+
+  test("operator code reads no system property or environment variable") {
+    // a property read is a setting no session conf shows and no plan
+    // records: each one doubles the configurations an operator can run in,
+    // unseen by Bench, Verify and the oracle. Session confs are the only
+    // knobs operator code takes.
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val dirs = Seq("operators", "functions", "streaming", "sources", "plans")
+      .map(root.resolve)
+    val files = Seq(root.resolve("Core.scala"), root.resolve("Staged.scala")) ++
+      dirs.flatMap { d =>
+        val s = java.nio.file.Files.walk(d)
+        try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+        finally s.close()
+      }
+    assert(files.size > 30, s"source scan found only ${files.size} files")
+    val read = """sys\.props|sys\.env|System\.getenv|System\.getProperty""".r
+    val offenders = files.flatMap { f =>
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if read.findFirstIn(line).isDefined => s"$f:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(offenders.isEmpty, "\n" + offenders.mkString("\n"))
   }
 }

@@ -506,6 +506,36 @@ class PlanShapeSpec extends SparkSuite {
       s"pruning removed too little: ${surviving.size} of ${all.size} dirs")
   }
 
+  test("exactly the known non-eager queries plan a SortAggregate") {
+    // the silent hash-agg fallback: an aggregate whose buffer field is not
+    // UnsafeRow-mutable plans a SortAggregate, which cost 10× on
+    // q_audit_checksum in r12 (docs/SCALE.md, "r14: first full
+    // subquery-aware SortAggregate sweep", explains each of these). AQE
+    // off: under AQE the executed plan is an AdaptiveSparkPlanExec leaf that
+    // the traversal below does not enter. collectWithSubqueries, not
+    // collect: a SortAggregate in a scalar-subquery branch counts too.
+    // Eager builders are skipped: they run their pipeline while building,
+    // and their read-back plan is a bare scan.
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    val found = try {
+      SparkEntry.queries.keys.toSeq.sorted.filterNot(Bench.isEager).filter { n =>
+        val p = run(n).queryExecution.executedPlan
+        assert(!p.isInstanceOf[org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec], n)
+        p.collectWithSubqueries {
+          case a: org.apache.spark.sql.execution.aggregate.SortAggregateExec => a
+        }.nonEmpty
+      }.toSet
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    assert(found == Set("q_ann_recall", "q_dedup_cluster_rep", "q_merge_upsert",
+      "q_profile_columns", "q_skew_profile", "q_stats_ks", "q_ts_ohlc"),
+      s"SortAggregate now in: ${found.toSeq.sorted.mkString(", ")}")
+  }
+
   test("AQE skew-join: a runtime-skewed sort-merge join is split (skew=true)") {
     // SCALE.md's second skew answer (beside the manual salting in
     // operators/Skew.scala): AQE's runtime skew-join split. This proves the

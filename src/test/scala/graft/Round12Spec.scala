@@ -630,6 +630,7 @@ class Round12Spec extends SparkSuite {
     val top = ref.toSeq.sortBy { case (id, s2) => (-s2, id) }.take(10)
     val got = run("q_text_bm25").collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
+    assert(got.length == top.length && got.nonEmpty, s"${got.length} rows")
     got.zip(top).foreach { case ((gid, gs), (rid, rs)) =>
       assert(gid == rid, s"doc=$gid vs $rid")
       assert(math.abs(gs - rs) < 1e-4, s"doc=$gid")
@@ -656,6 +657,7 @@ class Round12Spec extends SparkSuite {
     val top = auth.toSeq.sortBy { case (k, v) => (-v, k) }.take(10)
     val got = run("q_graph_hits").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
+    assert(got.length == top.length && got.nonEmpty, s"${got.length} rows")
     got.zip(top).foreach { case ((gk, gv), (rk2, rv)) =>
       assert(gk == rk2 && gv == rv, s"supp=$gk")
     }

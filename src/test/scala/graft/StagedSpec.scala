@@ -4,10 +4,9 @@ import org.apache.spark.sql.functions._
 
 /** Gates for the r17 staged-fold superstep device (graft.Staged): the fused
   * materialize+fold must agree with the two-job shape it replaced — the
-  * relation bit-for-bit, the scalar with the replaced aggregate — and the
-  * two consumers (HITS normalization, components fixpoint) must be
-  * shape-insensitive: fused and legacy (graft.probe.stagefold=off) runs
-  * return identical rows. */
+  * relation bit-for-bit, the scalar with the replaced aggregate — and its
+  * consumers must return what a driver-side reference computes: the
+  * components fixpoint here, HITS in Round12Spec. */
 class StagedSpec extends SparkSuite {
   import spark.implicits._
 
@@ -61,19 +60,29 @@ class StagedSpec extends SparkSuite {
     }
   }
 
-  test("hits and components: fused and legacy shapes return identical rows") {
-    def rows(q: String): Seq[String] =
-      run(q).collect().map(_.toString).toSeq
-    val prev = sys.props.get("graft.probe.stagefold")
-    val fusedHits = rows("q_graph_hits")
-    val fusedComp = rows("q_dedup_components")
-    sys.props("graft.probe.stagefold") = "off"
-    try {
-      assert(rows("q_graph_hits") == fusedHits)
-      assert(rows("q_dedup_components") == fusedComp)
-    } finally prev match {
-      case Some(v) => sys.props("graft.probe.stagefold") = v
-      case None => sys.props.remove("graft.probe.stagefold")
+  test("components fixpoint equals a driver-side union-find over the LSH collisions") {
+    // two docs collide when they share a band; every doc outside a
+    // collision (or without a signature) is its own component
+    val docs = Tables.table(spark, sf, "documents").select("doc_id")
+      .collect().map(_.getLong(0))
+    val parent = scala.collection.mutable.Map(docs.map(d => d -> d): _*)
+    def find(x: Long): Long = {
+      val p = parent(x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
     }
+    val byBand = functions.DedupOps.lshBands(spark, sf).collect()
+      .groupBy(_.getString(1)).values.map(_.map(_.getLong(0)).distinct)
+    byBand.foreach(ids => ids.tail.foreach { b =>
+      val (ra, rb) = (find(ids.head), find(b))
+      if (ra != rb) parent(ra) = rb
+    })
+    val sizes = docs.groupBy(find).values.map(_.length.toLong)
+    assert(byBand.exists(_.length > 1), "fixture has no LSH collisions")
+    assert(sizes.exists(_ > 2), "fixture has no component beyond a pair")
+    val r = run("q_dedup_components").head()
+    assert(r.getAs[Long]("n_docs") == docs.length.toLong)
+    assert(r.getAs[Long]("n_comp") == sizes.size.toLong)
+    assert(r.getAs[Long]("n_merged") == docs.length.toLong - sizes.size)
+    assert(r.getAs[Long]("max_comp") == sizes.max)
   }
 }
